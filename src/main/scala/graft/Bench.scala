@@ -387,10 +387,7 @@ object Bench {
     spark.read.parquet(tmp).where(col("k") % 7 === 0)
       .agg(sum("v"), countDistinct("s"))
       .write.format("noop").mode("overwrite").save()
-    try {
-      val d = new java.io.File(tmp)
-      d.listFiles().foreach(_.delete()); d.delete()
-    } catch { case _: Throwable => () }
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
   }
 
   /** Run `names` in THIS JVM (child mode / fallback / small local runs). */
@@ -404,15 +401,15 @@ object Bench {
     val localDir =
       if (shm.isDirectory && shm.getUsableSpace > (16L << 30)) "/dev/shm/graft-spark-local"
       else System.getProperty("java.io.tmpdir")
+    // fresh warehouse per run — the default ./spark-warehouse persists
+    // across JVMs while the in-memory catalog does not (see Verify)
+    val warehouse = java.nio.file.Files.createTempDirectory("graft-warehouse").toFile
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
-      // fresh warehouse per run — the default ./spark-warehouse persists
-      // across JVMs while the in-memory catalog does not (see Verify)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .config("spark.local.dir", localDir)
       // a multi-second full-VM stall must not kill the executor (round 1:
       // heartbeat death ×60 at default 10s interval / 120s timeout)
@@ -483,6 +480,7 @@ object Bench {
     }
     SparkEntry.clearCaches(spark)
     spark.stop()
+    org.apache.commons.io.FileUtils.deleteQuietly(warehouse)
     // re-print the complete line once more AFTER spark.stop(): combined with
     // build.sbt's showSuccess := false, the final JSON is the last stdout
     // line of the whole sbt invocation (rounds 1-3: driver parsed=null

@@ -44,14 +44,14 @@ object BronzeIngest {
                   table: String, runTs: Timestamp,
                   typeOverrides: Map[String, String] = Map.empty): Report = {
     val target = s"$bronzeRoot/$table"
+    val existed = store.exists(target)
     val raw =
-      if (store.exists(target))
-        landing.readPinned(table, store.schemaOf(target), auditCols)
+      if (existed) landing.readPinned(table, store.schemaOf(target), auditCols)
       else landing.readInferred(table, typeOverrides)
     if (raw.isEmpty) Report(table, 0, "skipped-empty")
     else {
       val withAudit = withAuditCols(raw, runTs)
-      val action = if (store.exists(target)) "appended" else "created"
+      val action = if (existed) "appended" else "created"
       // count observed during the append itself — the count-after-write
       // pattern re-read the whole landing batch for the report line
       val rows = graft.core.Observed.countDuring(withAudit)(

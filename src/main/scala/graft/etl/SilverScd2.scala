@@ -14,7 +14,8 @@ import graft.sources.{BucketedTableStore, TableConfig, TableStore, WatermarkStor
   * commit-then-watermark ordering.
   *
   * Order of effects per table (the reference's transactional contract):
-  *   1. read watermark; filter Bronze by `ingestion_timestamp > wm`;
+  *   1. read watermark; filter Bronze by `ingestion_timestamp > wm`,
+  *      pruning `ingest_date` partitions older than the watermark's date;
   *   2. stage INSERT/UPDATE rows against the current Silver slice;
   *   3. deliver the new-record side channel (Customers feed);
   *   4. atomically swap the merged Silver state;
@@ -57,13 +58,23 @@ object SilverScd2 {
       case None => store.replaceWith(silver, df, Seq("is_current"))
     }
 
-    val wm = watermarks.read(table)
-    val batch = store.read(bronze)
-      .where(col("ingestion_timestamp") > lit(wm).cast("timestamp"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // feeds ≥3 actions below
+    val wm = lit(watermarks.read(table)).cast("timestamp")
+    val bronzeDf = store.read(bronze)
+    // ingest_date is the local date of ingestion_timestamp, so rows newer
+    // than wm sit in partitions no older than wm's date. The slack covers a
+    // session time zone differing between ingest and this read: UTC offsets
+    // span -12..+14 h, which moves a local date by at most two days.
+    val pruned =
+      if (bronzeDf.columns.contains("ingest_date"))
+        bronzeDf.where(col("ingest_date") >= date_sub(to_date(wm), 2))
+      else bronzeDf
+    val batch = pruned.where(col("ingestion_timestamp") > wm)
+      .persist(StorageLevel.MEMORY_AND_DISK) // read by the control job and the stage
     try {
-      if (batch.isEmpty) return Report(table, 0, "skipped-empty")
-      val newWm = batch.agg(max("ingestion_timestamp")).head().getTimestamp(0)
+      // one job: the row count and the next watermark
+      val control = batch.agg(count(lit(1)), max("ingestion_timestamp")).head()
+      if (control.getLong(0) == 0L) return Report(table, 0, "skipped-empty")
+      val newWm = control.getTimestamp(1)
 
       if (!silverExists) {
         // first-run branch (2_Bronze_to_Silver.py:76-81); the path store
@@ -84,18 +95,21 @@ object SilverScd2 {
       val staged = Scd2.stage(batch, target.where(col("is_current")), config.pk)
         .persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        if (staged.isEmpty) {
+        // one job over the persisted stage answers every control question:
+        // anything to merge, anything for the side channel, the report count
+        val byAction = staged.groupBy("action").count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        val stagedRows = byAction.values.sum
+        if (stagedRows == 0L) {
           watermarks.commit(table, WatermarkStore.format(newWm))
           return Report(table, 0, "no-changes")
         }
-        if (table == sideChannelTable) {
-          val inserts = Scd2.insertedRecords(staged, sideChannelCols)
-          if (!inserts.isEmpty) sink.deliver(inserts)
-        }
+        if (table == sideChannelTable && byAction.getOrElse("INSERT", 0L) > 0L)
+          sink.deliver(Scd2.insertedRecords(staged, sideChannelCols))
         val next = Scd2.applyMerge(target, staged, config.pk, runTs)
         writeSilver(next)
         watermarks.commit(table, WatermarkStore.format(newWm)) // only after the swap
-        Report(table, staged.count(), "merged")
+        Report(table, stagedRows, "merged")
       } finally staged.unpersist()
     } finally batch.unpersist()
   }

@@ -4,6 +4,8 @@ import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.ManifestRead
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Versioned-Parquet table layout — the engine's replacement for the Delta
   * tables the reference relies on (append / overwrite / MERGE-rewrite /
@@ -14,7 +16,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * {{{
   *   table/
   *     data-<uuid>/part-*.parquet     immutable data directories
-  *     _v<N>                          manifest: newline-separated data dirs
+  *     _v<N>                          manifest, one entry per line:
+  *                                      #p <name> <ddl-type>  partition column
+  *                                      #s <StructType json>  data schema
+  *                                      #b <key> <value>      version marker
+  *                                      data-<uuid>           live data dir
   *     _current                       pointer: the committed version number
   * }}}
   *
@@ -24,9 +30,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * is added to the manifest instead of rewriting existing files (the same
   * idea as the Delta log, minimal single-writer form).
   *
+  * Every commit records the version's data schema (without partition
+  * columns, all nullable) in its `#s` line, and every read is built from
+  * it: planning a read opens no parquet footer and launches no Spark job.
   * Schema evolution (reference `mergeSchema=true`,
-  * 1_Landing_to_Bronze.py:60): reads merge schemas across data dirs, so a
-  * batch with new columns widens the table and old rows read as NULL.
+  * 1_Landing_to_Bronze.py:60): an append records the previous schema merged
+  * with the batch's, so a batch with new columns widens the table and old
+  * rows read as NULL. A manifest without a `#s` line was written before
+  * the schema was recorded and fails every read; rewrite such a table.
   */
 class TableStore(spark: SparkSession) {
 
@@ -58,11 +69,10 @@ class TableStore(spark: SparkSession) {
   private[sources] val manifestReadCount =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Manifest = data-dir lines plus optional `#p <name> <ddl-type>` lines
-    * recording the physical partition columns. The type is load-bearing:
-    * Spark's partition-value inference has no boolean (an
-    * `is_current=true` dir would read back as string), so [[read]] casts
-    * each recorded partition column back to its declared type. */
+  /** The lines of manifest `_v<v>` (layout in the class doc). A `#p` type
+    * is load-bearing: Spark's partition-value inference has no boolean (an
+    * `is_current=true` dir would read back as string), so [[read]] types
+    * each recorded partition column with its declared type. */
   private def manifestLines(table: String, v: Long): Seq[String] = {
     manifestReadCount.incrementAndGet()
     val mp = new Path(table, s"_v$v")
@@ -74,13 +84,31 @@ class TableStore(spark: SparkSession) {
   }
 
   private def manifest(table: String, v: Long): Seq[String] =
-    manifestLines(table, v).filterNot(_.startsWith("#"))
+    dirsOf(manifestLines(table, v))
 
-  private def partitionMeta(table: String, v: Long): Seq[(String, org.apache.spark.sql.types.DataType)] =
-    manifestLines(table, v).filter(_.startsWith("#p ")).map { l =>
+  private def dirsOf(lines: Seq[String]): Seq[String] =
+    lines.filterNot(_.startsWith("#"))
+
+  private def partitionsOf(lines: Seq[String]): Seq[(String, DataType)] =
+    lines.filter(_.startsWith("#p ")).map { l =>
       val Array(_, name, ddl) = l.split(" ", 3)
-      name -> org.apache.spark.sql.types.DataType.fromDDL(ddl)
+      name -> DataType.fromDDL(ddl)
     }
+
+  /** The `#p` and `#s` lines: what a re-commit of the same data dirs
+    * ([[restore]], [[stampMeta]]) carries over unchanged. */
+  private def layoutOf(lines: Seq[String]): Seq[String] =
+    lines.filter(l => l.startsWith("#p ") || l.startsWith("#s "))
+
+  private def dataSchemaOf(table: String, v: Long, lines: Seq[String]): StructType =
+    lines.find(_.startsWith("#s ")) match {
+      case Some(l) => DataType.fromJson(l.drop(3)).asInstanceOf[StructType]
+      case None => throw new IllegalStateException(
+        s"manifest _v$v at $table records no data schema: it was written " +
+          "before schema-in-manifest; rewrite the table")
+    }
+
+  private def schemaLine(schema: StructType): String = s"#s ${schema.json}"
 
   private def writeFile(p: Path, content: String): Unit = {
     val f = fs(p)
@@ -112,7 +140,7 @@ class TableStore(spark: SparkSession) {
   }
 
   private def commit(table: String, dirs: Seq[String],
-                     partitionMeta: Seq[String]): Long = {
+                     header: Seq[String]): Long = {
     val v = nextVersion(table)
     val mp = new Path(table, s"_v$v")
     // exclusive create = a single-writer TRIPWIRE, not a lock: two writers
@@ -129,7 +157,7 @@ class TableStore(spark: SparkSession) {
             s"TableStore: version $v at $table was already claimed - the store " +
               "is single-writer; serialize commits (" + e.getMessage + ")")
       }
-    try out.write((partitionMeta ++ dirs).mkString("\n").getBytes("UTF-8"))
+    try out.write((header ++ dirs).mkString("\n").getBytes("UTF-8"))
     finally out.close()
     writeFile(new Path(table, "_current"), v.toString) // pointer last = commit
     v
@@ -142,12 +170,12 @@ class TableStore(spark: SparkSession) {
       s"#p $c ${f.dataType.catalogString}"
     }
 
-  /** Read the current committed snapshot, merging schemas across data dirs.
+  /** Read the current committed snapshot with its recorded schema.
     * Partition columns carry their manifest-recorded types (inference
     * covers no boolean) and appear LAST in the schema, as with any
     * partitioned parquet layout.
     *
-    * Partitioned tables read through [[org.apache.spark.sql.graft.ManifestRead]]:
+    * Every table reads through [[org.apache.spark.sql.graft.ManifestRead]]:
     * built-in partition discovery rejects sibling partitioned data dirs in
     * one multi-path read ("conflicting directory structures"), and the
     * per-dir-scan union it previously forced plans O(data dirs) scans — a
@@ -167,25 +195,29 @@ class TableStore(spark: SparkSession) {
     * A vacuumed version fails loudly (listing the missing dirs) rather
     * than returning a silently partial table. */
   def readVersion(table: String, version: Long): DataFrame = {
+    val lines = readableManifest(table, version)
+    ManifestRead.read(spark,
+      dirsOf(lines).map(d => new Path(table, d).toString),
+      partitionsOf(lines), dataSchemaOf(table, version, lines))
+  }
+
+  /** `version`'s manifest lines, read once, after checking that the
+    * manifest exists and none of its data dirs was vacuumed. */
+  private def readableManifest(table: String, version: Long): Seq[String] = {
     val mp = new Path(table, s"_v$version")
     if (!fs(mp).exists(mp))
       throw new IllegalStateException(
         s"no manifest for version $version at $table " +
           s"(available: ${versions(table).mkString(", ")})")
-    val rel = manifest(table, version)
-    val missing = rel.filter { d =>
+    val lines = manifestLines(table, version)
+    val missing = dirsOf(lines).filter { d =>
       val p = new Path(table, d); !fs(p).exists(p)
     }
     if (missing.nonEmpty)
       throw new IllegalStateException(
         s"version $version at $table is no longer readable - data " +
           s"dir(s) ${missing.mkString(", ")} were vacuumed")
-    val dirs = rel.map(d => new Path(table, d).toString)
-    val parts = partitionMeta(table, version)
-    if (parts.isEmpty)
-      spark.read.option("mergeSchema", "true").parquet(dirs: _*)
-    else
-      org.apache.spark.sql.graft.ManifestRead.read(spark, dirs, parts)
+    lines
   }
 
   /** Roll the table back to a past snapshot (reference Delta `RESTORE`):
@@ -195,9 +227,8 @@ class TableStore(spark: SparkSession) {
     * manifests; nothing is copied. Fails like [[readVersion]] if the
     * target snapshot was vacuumed. */
   def restore(table: String, version: Long): Long = {
-    readVersion(table, version) // existence + vacuum validation
-    commit(table, manifest(table, version),
-      manifestLines(table, version).filter(_.startsWith("#p ")))
+    val lines = readableManifest(table, version)
+    commit(table, dirsOf(lines), layoutOf(lines))
   }
 
   /** Row-level diff between two committed snapshots (the Delta change-
@@ -308,7 +339,9 @@ class TableStore(spark: SparkSession) {
   def overwriteWithMeta(table: String, df: DataFrame, meta: Map[String, String],
                         partitionBy: Seq[String] = Nil): Long =
     commit(table, Seq(writeDataDir(table, df, partitionBy)),
-      partitionMetaFor(df, partitionBy) ++ metaLines(meta))
+      partitionMetaFor(df, partitionBy) ++
+        Seq(schemaLine(ManifestRead.commitSchema(df, partitionBy, None))) ++
+        metaLines(meta))
 
   /** Append with schema evolution: adds a data dir to the manifest without
     * touching existing files (reference Delta append + `mergeSchema`,
@@ -323,16 +356,20 @@ class TableStore(spark: SparkSession) {
     * cannot masquerade as current. */
   def appendWithMeta(table: String, df: DataFrame, meta: Map[String, String],
                      partitionBy: Seq[String] = Nil): Long = {
-    val (prev, prevMeta) = currentVersion(table) match {
-      case Some(v) => (manifest(table, v),
-        manifestLines(table, v).filter(_.startsWith("#p ")))
-      case None => (Seq.empty, Seq.empty)
+    val (prev, prevMeta, prevSchema) = currentVersion(table) match {
+      case Some(v) =>
+        val lines = manifestLines(table, v)
+        (dirsOf(lines), lines.filter(_.startsWith("#p ")),
+          Some(dataSchemaOf(table, v, lines)))
+      case None => (Seq.empty, Seq.empty, None)
     }
     val spec =
       if (prevMeta.nonEmpty) prevMeta.map(_.split(" ", 3)(1)).toSeq
       else partitionBy
     val pMeta = if (prevMeta.nonEmpty) prevMeta else partitionMetaFor(df, partitionBy)
-    commit(table, prev :+ writeDataDir(table, df, spec), pMeta ++ metaLines(meta))
+    val schema = ManifestRead.commitSchema(df, spec, prevSchema)
+    commit(table, prev :+ writeDataDir(table, df, spec),
+      pMeta ++ Seq(schemaLine(schema)) ++ metaLines(meta))
   }
 
   /** Metadata-only commit: re-commit the CURRENT manifest with the
@@ -349,9 +386,8 @@ class TableStore(spark: SparkSession) {
   def stampMeta(table: String, meta: Map[String, String]): Long = {
     val v = currentVersion(table).getOrElse(throw new IllegalStateException(
       s"stampMeta: no committed version at $table"))
-    commit(table, manifest(table, v),
-      manifestLines(table, v).filter(_.startsWith("#p ")) ++
-        metaLines(metaOf(manifestLines(table, v)) ++ meta))
+    val lines = manifestLines(table, v)
+    commit(table, dirsOf(lines), layoutOf(lines) ++ metaLines(metaOf(lines) ++ meta))
   }
 
   private def metaLines(meta: Map[String, String]): Seq[String] =
@@ -462,10 +498,16 @@ class TableStore(spark: SparkSession) {
                   partitionBy: Seq[String] = Nil): Long =
     overwrite(table, nextState, partitionBy)
 
-  /** Current committed schema (used to pin CSV re-reads,
-    * 1_Landing_to_Bronze.py:41-42). */
-  def schemaOf(table: String): org.apache.spark.sql.types.StructType =
-    read(table).schema
+  /** Current committed schema, as [[read]] returns it (used to pin CSV
+    * re-reads, 1_Landing_to_Bronze.py:41-42) — answered from the manifest
+    * alone: no relation is built and no data dir is listed. */
+  def schemaOf(table: String): StructType = {
+    val v = currentVersion(table).getOrElse(
+      throw new IllegalStateException(s"no committed version at $table"))
+    val lines = manifestLines(table, v)
+    StructType(dataSchemaOf(table, v, lines).fields ++
+      partitionsOf(lines).map { case (n, t) => StructField(n, t) })
+  }
 
   /** Rewrite the table's accumulated data dirs as ONE dir and commit —
     * the small-files remedy. Every append adds a data dir (and, under a
@@ -482,8 +524,8 @@ class TableStore(spark: SparkSession) {
   def compact(table: String): Long = {
     val v = currentVersion(table).getOrElse(
       throw new IllegalStateException(s"no committed version at $table"))
-    val spec = partitionMeta(table, v).map(_._1)
-    overwrite(table, read(table), spec)
+    val lines = manifestLines(table, v)
+    overwrite(table, readVersion(table, v), partitionsOf(lines).map(_._1))
   }
 
   /** Number of live data dirs in the current manifest — the compaction

@@ -29,6 +29,12 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * partition filters to the partition schema and filter the in-memory
   * partition list, so a pruned query never even lists the dead files'
   * splits.
+  *
+  * Unpartitioned versions use the same index with an empty partition
+  * schema, so listing stays a driver-side walk however many dirs a version
+  * holds (a multi-path `spark.read.parquet` lists more than
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` paths with a
+  * Spark job).
   */
 class ManifestFileIndex(spark: SparkSession, dataDirs: Seq[Path],
                         override val partitionSchema: StructType)
@@ -100,29 +106,40 @@ class ManifestFileIndex(spark: SparkSession, dataDirs: Seq[Path],
     partitions.flatMap(_.files.map(_.getLen)).sum
 }
 
-/** Public entry: a single-scan DataFrame over a manifest's data dirs. */
+/** Public entry: a single-scan DataFrame over a manifest's data dirs, and
+  * the data schema a commit records in the manifest. */
 object ManifestRead {
 
-  /** Read `dirs` as ONE partitioned parquet scan. `partitionCols` are the
-    * manifest-recorded (name, type) pairs, in layout order; they surface
-    * LAST in the schema, as with any partitioned parquet read. The data
-    * schema is merged across dirs (schema evolution: missing columns read
-    * as NULL). */
+  /** Read `dirs` as ONE parquet scan. `partitionCols` are the
+    * manifest-recorded (name, type) pairs, in layout order (empty for an
+    * unpartitioned table); they surface LAST in the schema, as with any
+    * partitioned parquet read. `dataSchema` is the manifest-recorded data
+    * schema ([[commitSchema]]): no parquet footer is opened at plan time,
+    * so building the read launches no Spark job. Files lacking a column of
+    * `dataSchema` (written before an append widened the table) read it as
+    * NULL. */
   def read(spark: SparkSession, dirs: Seq[String],
-           partitionCols: Seq[(String, DataType)]): DataFrame = {
+           partitionCols: Seq[(String, DataType)],
+           dataSchema: StructType): DataFrame = {
     val partitionSchema = StructType(partitionCols.map {
       case (n, t) => StructField(n, t)
     })
-    val dataSchema = dirs
-      .map { d =>
-        StructType(spark.read.option("mergeSchema", "true").parquet(d)
-          .schema.filterNot(f => partitionCols.exists(_._1 == f.name)))
-      }
-      .reduce(_ merge _)
     val index = new ManifestFileIndex(spark, dirs.map(new Path(_)), partitionSchema)
     val relation = HadoopFsRelation(index, partitionSchema, dataSchema,
-      bucketSpec = None, new ParquetFileFormat,
-      Map("mergeSchema" -> "true"))(spark)
+      bucketSpec = None, new ParquetFileFormat, Map.empty)(spark)
     spark.baseRelationToDataFrame(relation)
+  }
+
+  /** The data schema a commit of `df` records: its columns minus
+    * `partitionCols`, all nullable (as parquet reads them back). An append
+    * passes the `previous` version's recorded schema, and the batch merges
+    * onto it with the `StructType.merge` footer merging uses: a new column
+    * widens the table (older rows read NULL), an incompatible type fails
+    * the commit. */
+  def commitSchema(df: DataFrame, partitionCols: Seq[String],
+                   previous: Option[StructType]): StructType = {
+    val batch = StructType(df.schema.filterNot(f => partitionCols.contains(f.name)))
+      .asNullable
+    previous.fold(batch)(_.merge(batch))
   }
 }

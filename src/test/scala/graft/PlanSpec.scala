@@ -148,6 +148,64 @@ class PlanSpec extends SparkSpec {
       Set((1, "a2"), (2, "b"))
   }
 
+  test("silver's bronze scan prunes ingest_date partitions below the watermark") {
+    import java.sql.Timestamp
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import spark.implicits._
+    import graft.etl.{BronzeIngest, SilverScd2}
+    import graft.sources.{TableConfig, TableStore, WatermarkStore}
+    val root = java.nio.file.Files.createTempDirectory("graft-plan-bronze").toString
+    val store = new TableStore(spark)
+    val wm = new WatermarkStore(spark, s"$root/state")
+    val days = Seq("2026-01-01", "2026-02-01", "2026-03-01")
+      .map(d => Timestamp.valueOf(s"$d 12:00:00"))
+    def ingest(id: Int, ts: Timestamp): Unit =
+      store.append(s"$root/bronze/Customers", BronzeIngest.withAuditCols(
+        Seq((id, s"c$id")).toDF("CustomerID", "Name"), ts), Seq("ingest_date"))
+    def run(ts: Timestamp) = SilverScd2.run(store, wm, s"$root/bronze",
+      s"$root/silver", TableConfig("Customers", "CustomerID"), ts,
+      graft.actions.NullSink, sideChannelCols = Seq("Name"))
+    ingest(1, days(0)); ingest(2, days(1))
+    run(days(1)) // watermark now days(1)
+    ingest(3, days(2))
+
+    // the bronze scan sits inside the persisted batch of SilverScd2.run
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case s: FileSourceScanExec => Seq(s)
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+      case o => o.children.flatMap(scans)
+    }
+    val seen = new ConcurrentLinkedQueue[FileSourceScanExec]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        scans(qe.executedPlan).filter(_.partitionFilters.exists(
+          _.references.exists(_.name == "ingest_date"))).foreach(seen.add)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      run(days(2)).action shouldBe "merged"
+      import org.scalatest.concurrent.Eventually._
+      import org.scalatest.time.SpanSugar._
+      eventually(timeout(60.seconds)) { seen.isEmpty shouldBe false }
+    } finally spark.listenerManager.unregister(listener)
+    // the scan lists only the partitions the watermark can still need:
+    // days(0) lies more than the two days of slack below it
+    val scan = seen.peek()
+    scan.relation.location.listFiles(scan.partitionFilters, Nil)
+      .map(_.values.getInt(0)).toSet shouldBe
+      days.drop(1).map(d => d.toLocalDateTime.toLocalDate.toEpochDay.toInt).toSet
+    store.read(s"$root/silver/Customers").where($"is_current").count() shouldBe 3L
+  }
+
   test("banded range join plans an equi-join, never an inequality loop (q47)") {
     graft.core.CacheRegistry.scoped {
       val plan = planOf(SparkEntry.queries("q47_range_join_count")(spark, sf0001))

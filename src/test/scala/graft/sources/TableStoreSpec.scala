@@ -1,8 +1,14 @@
 package graft.sources
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
 
@@ -11,6 +17,137 @@ class TableStoreSpec extends SparkSpec {
 
   private def tmp(): String =
     Files.createTempDirectory("graft-store").toString
+
+  private def manifestLines(t: String, v: Long): Seq[String] =
+    Files.readAllLines(Paths.get(t, s"_v$v")).asScala.toSeq
+      .map(_.trim).filter(_.nonEmpty)
+
+  /** The current version's data schema as parquet footer inference sees
+    * it: each data dir's footers merged, partition columns dropped, the
+    * dirs' columns unioned in manifest order (the cases below only add
+    * columns, so the union is what a schema merge gives). */
+  private def footerSchema(store: TableStore, t: String): StructType = {
+    val lines = manifestLines(t, store.currentVersion(t).get)
+    val parts = lines.filter(_.startsWith("#p ")).map(_.split(" ")(1)).toSet
+    lines.filterNot(_.startsWith("#")).map { d =>
+      StructType(spark.read.option("mergeSchema", "true").parquet(s"$t/$d")
+        .schema.filterNot(f => parts(f.name)))
+    }.reduce((a, b) =>
+      StructType(a.fields ++ b.fields.filterNot(f => a.fieldNames.contains(f.name))))
+  }
+
+  /** The recorded schema matches footer inference and is what reads return. */
+  private def checkRecordedSchema(store: TableStore, t: String): Unit = {
+    val parts = manifestLines(t, store.currentVersion(t).get)
+      .filter(_.startsWith("#p ")).map(_.split(" ")(1)).toSet
+    StructType(store.schemaOf(t).filterNot(f => parts(f.name))) shouldBe
+      footerSchema(store, t)
+    store.read(t).schema shouldBe store.schemaOf(t)
+  }
+
+  /** Spark jobs launched by `body` on this thread: a listener counts job
+    * starts in a job group of their own, and a sentinel job in a second
+    * group, awaited after `body`, flushes the asynchronous listener bus. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val started = new AtomicInteger
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("store-reads") => started.incrementAndGet()
+          case Some("store-sentinel") => flushed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("store-reads", "reads under test")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("store-sentinel", "listener bus flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      flushed.await(60, TimeUnit.SECONDS) shouldBe true
+      started.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("reads, time travel and schemaOf launch no Spark job, partitioned " +
+    "or not") {
+    val store = new TableStore(spark)
+    val parted = tmp() + "/p"
+    val flat = tmp() + "/f"
+    (1 to 3).foreach { i =>
+      store.append(parted, Seq((i, s"v$i", i % 2 == 0)).toDF("id", "v", "is_current"),
+        Seq("is_current"))
+      store.append(flat, Seq((i, s"v$i")).toDF("id", "v"))
+    }
+    store.manifestDirs(parted) shouldBe 3
+    store.manifestDirs(flat) shouldBe 3
+    jobsDuring {
+      Seq(parted, flat).foreach { t =>
+        store.read(t).schema
+        store.readVersion(t, 1).schema
+        store.schemaOf(t)
+      }
+    } shouldBe 0
+    // and the reads still see every dir
+    store.read(parted).count() shouldBe 3L
+    store.read(flat).count() shouldBe 3L
+  }
+
+  test("the recorded schema equals footer inference after every kind of commit") {
+    val store = new TableStore(spark)
+    val flat = tmp() + "/f"
+    store.overwrite(flat, Seq((1, "a")).toDF("id", "v"))
+    checkRecordedSchema(store, flat)
+
+    val parted = tmp() + "/p"
+    store.overwrite(parted,
+      Seq((1, "a", BigDecimal("1.50"), java.sql.Date.valueOf("2026-01-01"), true))
+        .toDF("id", "v", "amount", "d", "is_current"), Seq("is_current"))
+    checkRecordedSchema(store, parted)
+    store.schemaOf(parted).fieldNames.toSeq shouldBe
+      Seq("id", "v", "amount", "d", "is_current")
+
+    // append with a new column: the schema widens, old rows read NULL
+    store.append(parted, Seq((2, "b", BigDecimal("2.00"),
+      java.sql.Date.valueOf("2026-01-02"), "x", false))
+      .toDF("id", "v", "amount", "d", "extra", "is_current"))
+    checkRecordedSchema(store, parted)
+    store.read(parted).where($"id" === 1).select("extra")
+      .as[Option[String]].head() shouldBe None
+
+    store.restore(parted, 0L)
+    checkRecordedSchema(store, parted)
+    store.schemaOf(parted).fieldNames should not contain "extra"
+
+    store.stampMeta(parted, Map("k" -> "1"))
+    checkRecordedSchema(store, parted)
+
+    store.append(parted, Seq((3, "c", BigDecimal("3.00"),
+      java.sql.Date.valueOf("2026-01-03"), "y", true))
+      .toDF("id", "v", "amount", "d", "extra", "is_current"))
+    store.compact(parted)
+    store.manifestDirs(parted) shouldBe 1
+    checkRecordedSchema(store, parted)
+    store.read(parted).count() shouldBe 2L
+  }
+
+  test("a manifest without a recorded schema fails loudly") {
+    val store = new TableStore(spark)
+    val t = tmp() + "/t"
+    store.overwrite(t, Seq((1, "a")).toDF("id", "v"))
+    // rewrite the manifest as a writer before schema-in-manifest left it
+    Files.write(Paths.get(t, "_v0"),
+      manifestLines(t, 0).filterNot(_.startsWith("#s ")).mkString("\n")
+        .getBytes("UTF-8"))
+    Files.delete(Paths.get(t, "._v0.crc"))
+    Seq[() => Any](() => store.read(t), () => store.schemaOf(t),
+      () => store.append(t, Seq((2, "b")).toDF("id", "v"))).foreach { f =>
+      intercept[IllegalStateException](f()).getMessage should include(
+        "written before schema-in-manifest; rewrite the table")
+    }
+  }
 
   test("exists is false before the first commit, true after") {
     val store = new TableStore(spark)
@@ -250,6 +387,10 @@ class TableStoreSpec extends SparkSpec {
     store.metaMaxLong(t, "committedBatch") shouldBe Some(300L)
     // ONE manifest read (the current version) — not 301
     store.manifestReadCount.get() should be <= 2L
+    // a read parses its manifest once for dirs, partitions and schema
+    store.manifestReadCount.set(0L)
+    store.read(t)
+    store.manifestReadCount.get() shouldBe 1L
     // the absent-key path still scans history (and is the slow path)
     store.manifestReadCount.set(0L)
     store.metaMaxLong(t, "nope") shouldBe None
